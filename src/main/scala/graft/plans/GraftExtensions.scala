@@ -23,9 +23,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // Manifest zone-map pruning + metadata-only count(*) (GraftZoneRules)
     ext.injectOptimizerRule(_ => new GraftZonePrune)
     ext.injectOptimizerRule(_ => new GraftCountFromStats)
-    // Native columnar MoR reads: splice the merge plan under the scan at
-    // pre-CBO (after filter pushdown, before V2ScanRelationPushDown would
-    // build the V1 row bridge) — see GraftMorNativeRead.
+    // The one SQL read path of MoR-pending and other reader-backed
+    // relations: splice the reader plan in place of the relation at
+    // pre-CBO (after filter pushdown, before V2ScanRelationPushDown
+    // builds the relation's scan) — see GraftMorNativeRead.
     ext.injectPreCBORule(_ => new GraftMorNativeRead)
     // ...and the planning-time eraser for the ANALYZE-stats pin the
     // splice leaves on its subtree (GraftStatsPin reports, never runs)

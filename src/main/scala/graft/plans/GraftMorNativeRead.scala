@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, Expression, PredicateHelper}
 import org.apache.spark.sql.catalyst.plans.logical.{DeleteFromTable, Filter, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -10,22 +9,21 @@ import org.apache.spark.sql.{functions => F, GraftColumnBridge}
 import graft.sources.{FilterTranslation, GraftSqlTable}
 
 /**
- * Native columnar execution for MoR-pending SQL reads: splices the
- * distributed merge LogicalPlan (keep-latest-per-key + tombstone
- * anti-join, the plan [[graft.sources.GraftCatalog.read]] builds)
- * DIRECTLY under the query in place of the `DataSourceV2Relation`, so a
- * SQL read of an uncompacted PK table executes as ordinary Catalyst
- * operators — vectorized parquet scans, whole-stage codegen, real
- * statistics — instead of draining through the `V1Scan` row bridge
- * (every row paying InternalRow→Row→InternalRow conversion and the plan
- * losing codegen at the boundary). The reference hands its engine
+ * The SQL read path of every DataFrame-backed graft relation: splices the
+ * relation's reader plan — for MoR-pending snapshots the distributed
+ * merge LogicalPlan (keep-latest-per-key + tombstone anti-join, the plan
+ * [[graft.sources.GraftCatalog.read]] builds), for `t$audit_log` the
+ * changelog plan — DIRECTLY under the query in place of the
+ * `DataSourceV2Relation`, so a SQL read of an uncompacted PK table
+ * executes as ordinary Catalyst operators: vectorized parquet scans,
+ * whole-stage codegen, real statistics. The reference hands its engine
  * columnar pages with merge-at-read (TrinoPageSourceBase.java); this is
  * the Spark-native equivalent of that parity point.
  *
  * Injected at PRE-CBO: after the operator-optimization fixed point, so
  * filters sit adjacent to the relation (the rule sees the final pushable
  * set — bucket point-lookups and zone pruning keep working), and before
- * V2ScanRelationPushDown, so the V1 bridge scan is never built. The
+ * V2ScanRelationPushDown, so the relation's own scan is never built. The
  * spliced subtree is pre-optimized in isolation (the same nested-
  * optimizer pattern as Catalyst's own OptimizeSubqueries), which prunes
  * its columns to the outer query's requirement and normalizes any
@@ -35,17 +33,12 @@ import graft.sources.{FilterTranslation, GraftSqlTable}
  * DataSourceV2Strategy resolves the SupportsDelete pushdown from the
  * relation node itself. UPDATE/MERGE were already rewritten to leaf
  * commands at resolution (GraftDml) whose carried plans re-enter the
- * optimizer — and get this splice — when the command executes. The
- * `V1Scan` bridge remains as fallback: rule disabled, non-GraftSqlTable
- * reads (`$audit_log`, unresolved `$ro`), or any name/type misalignment.
+ * optimizer — and get this splice — when the command executes. There is
+ * no other read path: a relation left unspliced (no extension in the
+ * session) plans a scan that fails when executed, and a reader plan
+ * whose columns do not line up with the relation's fails the query.
  */
 class GraftMorNativeRead extends Rule[LogicalPlan] with PredicateHelper {
-
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    val enabled = SparkSession.active.conf
-      .get("spark.graft.morNativeRead.enabled", "true").toBoolean
-    if (!enabled) plan else rewrite(plan)
-  }
 
   private def morTable(rel: DataSourceV2Relation): Option[GraftSqlTable] =
     rel.table match {
@@ -53,35 +46,33 @@ class GraftMorNativeRead extends Rule[LogicalPlan] with PredicateHelper {
       case _ => None
     }
 
-  private def rewrite(p: LogicalPlan): LogicalPlan = p match {
+  override def apply(p: LogicalPlan): LogicalPlan = p match {
     // DELETE pushdown hangs off the relation node — leave the whole
     // subtree alone (its condition is delta-sized work anyway).
     case d: DeleteFromTable => d
     case proj @ Project(_, f @ Filter(cond, rel: DataSourceV2Relation))
         if morTable(rel).isDefined =>
-      splice(rel, Some(cond),
-        (proj.references ++ cond.references).toSeq.filter(rel.outputSet.contains))
-        .map(sub => proj.copy(child = f.copy(child = sub))).getOrElse(proj)
+      proj.copy(child = f.copy(child = splice(rel, Some(cond),
+        (proj.references ++ cond.references).toSeq.filter(rel.outputSet.contains))))
     case f @ Filter(cond, rel: DataSourceV2Relation) if morTable(rel).isDefined =>
-      splice(rel, Some(cond), rel.output)
-        .map(sub => f.copy(child = sub)).getOrElse(f)
+      f.copy(child = splice(rel, Some(cond), rel.output))
     case proj @ Project(_, rel: DataSourceV2Relation) if morTable(rel).isDefined =>
-      splice(rel, None, proj.references.toSeq.filter(rel.outputSet.contains))
-        .map(sub => proj.copy(child = sub)).getOrElse(proj)
+      proj.copy(child = splice(rel, None,
+        proj.references.toSeq.filter(rel.outputSet.contains)))
     case rel: DataSourceV2Relation if morTable(rel).isDefined =>
-      splice(rel, None, rel.output).getOrElse(rel)
-    case other => other.mapChildren(rewrite)
+      splice(rel, None, rel.output)
+    case other => other.mapChildren(apply)
   }
 
-  /** The merge plan for `rel`, pruned to `required` and re-keyed to the
-    * relation's exprIds; None = fall back to the V1 bridge. The enclosing
-    * Filter/Project stay on top unchanged — the reader's superset
-    * contract (bucket routing, zone pruning) needs the re-application. */
+  /** The reader plan for `rel`, pruned to `required` and re-keyed to the
+    * relation's exprIds. The enclosing Filter/Project stay on top
+    * unchanged — the reader's superset contract (bucket routing, zone
+    * pruning) needs the re-application. */
   private def splice(rel: DataSourceV2Relation, cond: Option[Expression],
-      required: Seq[Attribute]): Option[LogicalPlan] = try {
+      required: Seq[Attribute]): LogicalPlan = {
     val table = morTable(rel).get
     // the final pushable set: deterministic conjuncts with a source-
-    // filter translation (same matrix the V1 bridge's pushFilters accepts)
+    // filter translation
     val pushed: Array[SourceFilter] = cond.toSeq
       .flatMap(splitConjunctivePredicates).filter(_.deterministic)
       .flatMap(e => GraftColumnBridge.translateFilter(e))
@@ -100,49 +91,38 @@ class GraftMorNativeRead extends Rule[LogicalPlan] with PredicateHelper {
     // merge plan's columns/filters before it joins the outer tree (the
     // outer optimizer batches that do that work have already run)
     val sub = pruned.queryExecution.optimizedPlan
-    // name resolution follows the SESSION's case sensitivity; if two
-    // merge-plan outputs collide under it, aliasing could silently bind
-    // the wrong column — refuse to splice and fall back to the V1 bridge
+    // name resolution follows the SESSION's case sensitivity; a name
+    // that is missing, ambiguous or of another type would bind the wrong
+    // column — fail the query with both schemas named
     val caseSensitive =
       org.apache.spark.sql.internal.SQLConf.get.caseSensitiveAnalysis
     def nameKey(n: String): String =
       if (caseSensitive) n else n.toLowerCase(java.util.Locale.ROOT)
-    val grouped = sub.output.groupBy(a => nameKey(a.name))
-    if (grouped.valuesIterator.exists(_.size > 1)) None
-    else {
-      val byName = grouped.map { case (k, v) => (k, v.head) }
-      val aligned = required.map { o =>
-        byName.get(nameKey(o.name)).collect {
-          case a if GraftColumnBridge.compatibleType(a.dataType, o.dataType) =>
-            Alias(a, o.name)(exprId = o.exprId, qualifier = o.qualifier,
-              explicitMetadata = Some(o.metadata))
-        }
-      }
-      if (aligned.exists(_.isEmpty)) None
-      else {
-        val projected = Project(aligned.map(_.get), sub)
-        // ANALYZE statistics for the scanned snapshot, pinned onto the
-        // spliced subtree (r15): the V1 bridge could never surface them
-        // (V1ScanWrapper forwards no Statistics) and the subtree's own
-        // estimate is compressed version-file bytes through join/window
-        // propagation — neither the post-merge row count nor the logical
-        // width. With the pin, a logically-small MoR dim auto-broadcasts
-        // and CBO sees rows/NDV exactly as on raw-file scans. The
-        // analyzed-snapshot == scanned-snapshot gate lives in
-        // GraftSqlTable.cboStats (stale stats are never served).
-        table.cboStats match {
-          case Some((rows, cols)) =>
-            Some(GraftStatsPin(projected, graft.sources.GraftCboStats
-              .toCatalyst(rows, projected.output, cols)))
-          case None => Some(projected)
-        }
-      }
+    val byName = sub.output.groupBy(a => nameKey(a.name))
+    val aligned = required.map { o =>
+      byName.get(nameKey(o.name)).collect {
+        case Seq(a) if GraftColumnBridge.compatibleType(a.dataType, o.dataType) =>
+          Alias(a, o.name)(exprId = o.exprId, qualifier = o.qualifier,
+            explicitMetadata = Some(o.metadata))
+      }.getOrElse(throw new IllegalStateException(
+        s"${table.name()}: the reader plan's columns " +
+          s"${sub.schema.simpleString} do not line up with the relation's " +
+          s"${rel.schema.simpleString} at column `${o.name}`"))
     }
-  } catch {
-    // any surprise (exotic travel state, schema drift mid-plan) falls
-    // back to the always-correct V1 bridge rather than failing the query
-    case scala.util.control.NonFatal(e) =>
-      logWarning(s"graft MoR native read fell back to the V1 bridge: $e")
-      None
+    val projected = Project(aligned, sub)
+    // ANALYZE statistics for the scanned snapshot, pinned onto the
+    // spliced subtree (r15): the subtree's own estimate is compressed
+    // version-file bytes through join/window propagation — neither the
+    // post-merge row count nor the logical width. With the pin, a
+    // logically-small MoR dim auto-broadcasts and CBO sees rows/NDV
+    // exactly as on raw-file scans. The analyzed-snapshot ==
+    // scanned-snapshot gate lives in GraftSqlTable.cboStats (stale stats
+    // are never served).
+    table.cboStats match {
+      case Some((rows, cols)) =>
+        GraftStatsPin(projected, graft.sources.GraftCboStats
+          .toCatalyst(rows, projected.output, cols))
+      case None => projected
+    }
   }
 }

@@ -8,8 +8,7 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
  * Pins exact statistics onto a logical subtree — the vehicle that gets
  * ANALYZE numbers to the optimizer for the spliced MoR merge plan
  * (GraftMorNativeRead). A MoR-pending read has no single relation node
- * to report through: the V1 bridge's `V1ScanWrapper` forwards no
- * `Statistics` at all (documented in GraftMorScanBuilder), and the
+ * to report through: the splice replaces the relation, and the
  * spliced subtree's own estimate is the sum of its version files'
  * compressed bytes run through join/window propagation — neither the
  * post-merge row count nor the logical width. This node reports the

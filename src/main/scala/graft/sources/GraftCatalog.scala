@@ -1878,25 +1878,6 @@ class GraftCatalog(private[sources] val spark: SparkSession,
    * with recorded stats, and the table has no primary key (MoR merge
    * changes the visible count).
    */
-  /**
-   * Upper-bound row estimate of a snapshot from manifest dir stats alone
-   * (sum of per-dir footer row counts over DATA entries — pre-merge, so
-   * MoR-pending PK snapshots over-count; tombstones/DVs only shrink).
-   * None when any data dir lacks stats (ORC). Planning-only: feeds the
-   * SQL bridge's reported size so a small MoR dim auto-broadcasts.
-   */
-  def estimatedRowsUpperBound(schema: String, table: String,
-      snapshotId: Option[Long] = None,
-      asOfMillis: Option[Long] = None): Option[Long] = {
-    val m = readManifest(schema, table)
-    val chosen = chooseSnapshot(m, schema, table, snapshotId, asOfMillis)
-    if (chosen.isEmpty) return Some(0L)
-    val stats = dirStatsFrom(m)
-    val counts = filesOf(chosen.get).filter(_.kind == "data")
-      .map(fe => stats.get(fe.dir).map(_.rows))
-    if (counts.exists(_.isEmpty)) None else Some(counts.flatten.sum)
-  }
-
   def countRows(schema: String, table: String,
       snapshotId: Option[Long] = None,
       asOfMillis: Option[Long] = None): Option[Long] = {
@@ -3737,16 +3718,17 @@ object GraftCatalog {
     * resolve (r19 rule metering: 564 analyzer batch runs on one bucketed
     * read, ~half the query's driver gap) — while the N-ary form analyzes
     * the final tree once and its already-analyzed children are skipped.
-    * Result-identical to the by-name reduce: every call site unions
-    * frames built by one projection (same field names, same order,
-    * same types), and the guard below falls back to the by-name reduce
-    * if that ever stops holding. */
+    * Every call site unions frames built by one projection (same field
+    * names, same order, same types); the N-ary Union binds by position,
+    * so frames whose field lists differ are refused, never re-aligned. */
   private[sources] def unionAllByName(frames: Seq[DataFrame]): DataFrame = {
     require(frames.nonEmpty, "unionAllByName of zero frames")
     if (frames.size == 1) return frames.head
     val names = frames.head.schema.fieldNames.toSeq
-    if (frames.exists(_.schema.fieldNames.toSeq != names))
-      return frames.reduce(_ unionByName _)
+    val mismatch = frames.find(_.schema.fieldNames.toSeq != names)
+    require(mismatch.isEmpty, "unionAllByName over frames of different " +
+      s"field lists: [${names.mkString(", ")}] vs " +
+      s"[${mismatch.map(_.schema.fieldNames.mkString(", ")).getOrElse("")}]")
     org.apache.spark.sql.GraftColumnBridge.dataFrame(
       frames.head.sparkSession,
       org.apache.spark.sql.catalyst.plans.logical.Union(

@@ -10,7 +10,7 @@ import org.apache.spark.sql.classic
 import org.apache.spark.sql.catalyst.analysis.{NoSuchNamespaceException, NoSuchTableException}
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.{Expressions, Transform}
-import org.apache.spark.sql.connector.read.{LocalScan, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns, V1Scan}
+import org.apache.spark.sql.connector.read.{LocalScan, Scan, ScanBuilder}
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsTruncate, V1Write, Write, WriteBuilder}
 import org.apache.spark.sql.{functions => F, Column}
 import org.apache.spark.sql.sources._
@@ -44,14 +44,15 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
  *
  * Tables whose current snapshot needs merge-on-read resolution (PK tables
  * with multiple deltas, tombstones, or files on older schema versions)
- * are served by a read-time merge scan: the same keep-latest-per-key +
- * tombstone plan [[GraftCatalog.read]] builds, bridged into the DSv2 scan
- * via [[V1Scan]] — a distributed plan, nothing driver-side. SELECT works
- * immediately after INSERT upserts, no compact prerequisite (the
- * reference behaves the same: Paimon PK reads merge at read time,
- * TrinoPageSourceBase.java). Pushed filters are applied on the merged
- * view (Catalyst then pushes them through the merge window into the
- * parquet scans where legal — PK predicates prune before the merge).
+ * carry the keep-latest-per-key + tombstone plan [[GraftCatalog.read]]
+ * builds as their reader, and `graft.plans.GraftMorNativeRead` splices
+ * that plan directly under the query — one distributed Catalyst plan,
+ * nothing driver-side. SELECT works immediately after INSERT upserts, no
+ * compact prerequisite (the reference behaves the same: Paimon PK reads
+ * merge at read time, TrinoPageSourceBase.java). The splice is the only
+ * way such a table runs in SQL, so MoR reads, UPDATE and MERGE need
+ * `spark.sql.extensions=graft.plans.GraftExtensions` next to the catalog
+ * registration; without it the scan fails when executed.
  */
 class GraftSparkCatalog extends TableCatalog with SupportsNamespaces
     with ProcedureCatalog with StagingTableCatalog {
@@ -186,13 +187,12 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces
         // branch-aware: `t$branch_dev$snapshots` views a branch lineage
         if (!tableExists(Identifier.of(Array(schemaName), base)))
           throw new NoSuchTableException(Seq(schemaName, base))
-        // audit_log is DATA-sized (the full row-kinded changelog, Paimon's
-        // `t$audit_log`), so it reads through the distributed V1 bridge —
-        // never the driver-local LocalScan the manifest-sized tables use.
+        val viewName = s"$catalogName.$schemaName.$tableName"
         // read-optimized (Paimon's table$ro): the base table AT its
         // latest fully-compacted snapshot — loads through the normal
-        // resolved path (native vectorized scan + zone pruning), never
-        // the merge bridge. Empty until something resolved exists.
+        // resolved path (native vectorized scan + zone pruning), never a
+        // merge. Until something resolved exists it is a read-only table
+        // over no files at all (readOptimized's empty frame).
         if (kind == "ro") {
           // travel bound: explicit VERSION/TIMESTAMP AS OF or the session
           // scan properties, resolved exactly like a base-table read
@@ -203,22 +203,22 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces
                 case gt: GraftSqlTable => gt.asReadOnly // $ro never writes the base
                 case t => t
               }
-            case None => new GraftV1ReadTable(
-              s"$catalogName.$schemaName.$tableName",
-              gc.currentSchema(schemaName, base),
-              // bound frozen at load: a compaction landing between load
-              // and scan cannot leak a newer image past AS OF
-              () => gc.readOptimized(schemaName, base, upTo = bound))
+            case None =>
+              readOnlyTable(viewName, gc.currentSchema(schemaName, base), None)
           }
         }
+        // audit_log is DATA-sized (the full row-kinded changelog, Paimon's
+        // `t$audit_log`): its reader's distributed plan is spliced under
+        // the query like a MoR read — never the driver-local LocalScan the
+        // manifest-sized tables use.
         if (kind == "audit_log") {
           // honor time travel (explicit AS OF or session scan properties):
           // the changelog spans 0..chosen snapshot
           val upTo = gc.chosenSnapshotId(schemaName, base, snapshotId, asOfMillis)
             .getOrElse(0L)
-          return new GraftV1ReadTable(s"$catalogName.$schemaName.$tableName",
+          return readOnlyTable(viewName,
             gc.changelogSchemaOf(schemaName, base), // manifest-only, no plan built
-            () => gc.readChangelog(schemaName, base, 0L, upTo))
+            Some(() => gc.readChangelog(schemaName, base, 0L, upTo)))
         }
         // snapshot-scoped views honor VERSION/TIMESTAMP AS OF (and the
         // session scan properties) like a base-table read; the rest are
@@ -236,7 +236,7 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces
           case "statistics" => gc.statisticsTable(schemaName, base)
           case "branches" => gc.branchesTable(schemaName, base)
         }
-        return new GraftMetadataTable(s"$catalogName.$schemaName.$tableName", df)
+        return new GraftMetadataTable(viewName, df)
       case _ => ()
     }
     // NoSuchTableException, not IllegalArgument: Spark's resolution
@@ -247,27 +247,27 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces
     val entries = gc.snapshotFileEntries(schemaName, tableName, snapshotId, asOfMillis)
     val curVersion = gc.currentSchemaVersionOf(schemaName, tableName)
     val pk = gc.primaryKeyOf(schemaName, tableName)
-    // Bucketed PK tables always scan through the merge bridge: their file
-    // layout carries the physical __bucket partition dirs, which a raw
-    // ParquetTable would surface as a column.
+    // Bucketed PK tables always read through the catalog's reader: their
+    // file layout carries the physical __bucket partition dirs, which a
+    // raw ParquetTable would surface as a column.
     val bucketed = gc.bucketCountOf(schemaName, tableName).isDefined
     // A partitioned table spanning several snapshot dirs cannot feed one
     // ParquetTable: Spark's partition discovery requires all col=value
     // leaves to share a single non-kv base dir, and N roots give N bases
-    // (CONFLICTING_DIRECTORY_STRUCTURES). Those read through the V1
-    // bridge, which unions the dirs per-entry and zone-prunes via
-    // readWhere.
+    // (CONFLICTING_DIRECTORY_STRUCTURES). Those read through the
+    // catalog's reader, which unions the dirs per-entry and zone-prunes
+    // via readWhere.
     val partitioned = gc.partitionColumnsOf(schemaName, tableName).nonEmpty
-    // ORC tables (file.format=orc) read through the V1 merge bridge —
-    // the raw-file fast path below is a ParquetTable; the bridge's
-    // gc.read is format-aware and serves the same resolved image.
+    // ORC tables (file.format=orc) read through the catalog's reader —
+    // the raw-file fast path below is a ParquetTable; gc.read is
+    // format-aware and serves the same resolved image.
     val resolvedAsFiles =
       gc.fileFormatOf(schemaName, tableName) == "parquet" &&
       entries.forall(e => e.kind == "data" && e.schemaVersion == curVersion) &&
         (pk.isEmpty || (entries.size <= 1 && !bucketed)) &&
         (!partitioned || entries.size <= 1)
     // MoR-pending state (PK deltas, tombstones, pre-evolution files) is
-    // served through the read-time merge scan; fully-resolved snapshots
+    // served through the read-time merge reader; fully-resolved snapshots
     // keep the native vectorized parquet path (raw file scans + pushdown).
     // The reader sees the pushed filters: on a bucketed table, equality
     // on the FULL primary key prunes the read to that key's single
@@ -295,8 +295,8 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces
           case None => FilterTranslation.toCondition(filters) match {
             // readWhere zone-prunes whole dirs when provably safe
             // (append-only current-schema snapshots) and degrades to
-            // read().filter otherwise — the filter is re-applied by the
-            // V1 scan either way, so this is purely a file-list shrink.
+            // read().filter otherwise — the splice re-applies the filter
+            // either way, so this is purely a file-list shrink.
             case Some(cond) if filters.nonEmpty =>
               gc.readWhere(schemaName, tableName, cond, snapshotId, asOfMillis)
             case _ => gc.read(schemaName, tableName, snapshotId, asOfMillis)
@@ -307,21 +307,15 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces
       gc.dirLocation(schemaName, tableName, dir)
     val paths = if (resolvedAsFiles) entries.map(e => dirPath(e.dir)) else Seq.empty
     val schema = gc.currentSchema(schemaName, tableName)
-    val parquet = ParquetTable(s"$catalogName.$schemaName.$tableName",
-      spark.asInstanceOf[classic.SparkSession],
-      new CaseInsensitiveStringMap(Map.empty[String, String].asJava),
-      paths, Some(schema), classOf[ParquetFileFormat])
+    val parquet = parquetTable(s"$catalogName.$schemaName.$tableName", paths, schema)
     // Manifest zone maps, threaded into the table so the optimizer can
     // skip whole dirs at planning time (GraftZonePrune) and answer bare
-    // count(*) without a scan (GraftCountFromStats). Parsed only when a
-    // resolved file scan can use them — the V1-bridge paths get their
-    // pruning inside readWhere instead, so loading stats here would be
-    // per-query metadata I/O thrown away.
+    // count(*) without a scan (GraftCountFromStats).
     // Manifest stats are sound whenever the snapshot is plain
     // current-schema append data and no MoR merge can change the visible
     // rows — INDEPENDENT of whether the physical scan is a raw file scan
-    // or the V1 bridge (a multi-dir partitioned append table reads
-    // through the bridge purely for Spark's partition-discovery
+    // or the spliced reader plan (a multi-dir partitioned append table
+    // reads through the reader purely for Spark's partition-discovery
     // limitation; its stats are as exact as any). Single-dir PK tables
     // keep their zones too (the raw files ARE the image), matching the
     // old resolvedAsFiles gate.
@@ -376,11 +370,24 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces
       fileZonesIn = fileZonesIn,
       bloomIn = () => gc.bloomIndexInfo(schemaName, tableName)
         .map { case (d, v) => dirPath(d) -> v },
-      morRowsHintIn = () => gc.estimatedRowsUpperBound(
-        schemaName, tableName, snapshotId, asOfMillis),
       cboStatsIn = () => gc.analyzeStatsOf(
         schemaName, tableName, snapshotId, asOfMillis))
   }
+
+  private def parquetTable(name: String, paths: Seq[String],
+      schema: StructType): ParquetTable =
+    ParquetTable(name, spark.asInstanceOf[classic.SparkSession],
+      new CaseInsensitiveStringMap(Map.empty[String, String].asJava),
+      paths, Some(schema), classOf[ParquetFileFormat])
+
+  /** A read-only table over `reader`'s frame, spliced under the query
+    * like a MoR read (`$audit_log`); None reads no files at all (an
+    * unresolved `$ro`). */
+  private def readOnlyTable(name: String, schema: StructType,
+      reader: Option[() => org.apache.spark.sql.DataFrame]): GraftSqlTable =
+    new GraftSqlTable(parquetTable(name, Seq.empty, schema), Seq.empty,
+      Map.empty, reader.map(r => (_: Array[Filter]) => r()),
+      (_, _) => (), _ => (), canDelete = false, readOnly = true)
 
   /** SQL INSERT → snapshot commit: `overwrite` for INSERT OVERWRITE,
     * `dynamic` when Spark plans OverwritePartitionsDynamic (session
@@ -423,10 +430,8 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces
       options = opts, partitionBy = partitionCols, primaryKey = pk)
     // freshly created: zero snapshots -> empty parquet table over no paths
     new GraftSqlTable(
-      ParquetTable(s"$catalogName.${ident.namespace.head}.${ident.name}",
-        spark.asInstanceOf[classic.SparkSession],
-        new CaseInsensitiveStringMap(Map.empty[String, String].asJava),
-        Seq.empty, Some(schema), classOf[ParquetFileFormat]),
+      parquetTable(s"$catalogName.${ident.namespace.head}.${ident.name}",
+        Seq.empty, schema),
       partitionCols, opts, None, commitInsert(ns1(ident.namespace), ident.name) _,
       cond => { gc.deleteWhere(ns1(ident.namespace), ident.name, cond); () },
       canDelete = pk.nonEmpty || opts.get("deletion-vectors").contains("true"))
@@ -595,21 +600,6 @@ private[sources] class GraftMetadataTable(tableName: String,
     }
 }
 
-/** Read-only V2 table over a lazily-built DataFrame, executed through the
-  * [[GraftMorScanBuilder]] V1 bridge — distributed (executors run the
-  * frame's plan), with filter/column pushdown honored on the result.
-  * Used for data-sized system tables like `t$audit_log`. */
-private[sources] class GraftV1ReadTable(tableName: String,
-    schema0: StructType, reader: () => org.apache.spark.sql.DataFrame)
-  extends Table with SupportsRead {
-  override def name(): String = tableName
-  override def schema(): StructType = schema0
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new GraftMorScanBuilder(schema0, _ => reader())
-}
-
 /** Translate DSv2 source filters to Column predicates (the supported
   * subset mirrors the reference's TrinoFilterConverter.java:81–215 —
   * =, <, <=, >, >=, IN, IS NULL, AND/OR/NOT). */
@@ -641,8 +631,10 @@ private[graft] object FilterTranslation {
 }
 
 /**
- * V2 table over a catalog snapshot: scans delegate to the engine's
- * parquet implementation (vectorized read + pushdown); writes route
+ * V2 table over a catalog snapshot: resolved snapshots scan through the
+ * engine's parquet implementation (vectorized read + pushdown), while a
+ * table with a `morRead` reader is read by splicing the reader's plan
+ * under the query (graft.plans.GraftMorNativeRead); writes route
  * through the snapshot commit protocol via the V1 write bridge (the
  * insert arrives as a resolved DataFrame and becomes one atomic
  * append/upsert/overwrite commit — never a raw file write).
@@ -687,14 +679,6 @@ private[graft] class GraftSqlTable(delegate: ParquetTable,
       * [[GraftCatalog.readWhere]]'s bloom pass. Thunked like the zones:
       * zero manifest cost unless a Filter actually consults it. */
     bloomIn: () => Map[String, (String, Set[String])] = () => Map.empty,
-    /** Upper-bound ROW estimate for the MoR bridge scan, from manifest
-      * dir stats alone (pre-merge row sum — tombstones and pending
-      * merges only shrink it). V1 relations otherwise report the default
-      * huge size, so a small uncompacted PK dim would never
-      * auto-broadcast in a SQL join; an upper bound can only
-      * under-broadcast, never over-broadcast. Thunked: zero manifest
-      * cost unless a MoR scan is actually planned. */
-    morRowsHintIn: () => Option[Long] = () => None,
     /** ANALYZE statistics (exact rows + per-column ndv/nulls/avgLen) for
       * the scanned snapshot — thunked like the zones; feeds the scan's
       * reported DSv2 Statistics (see GraftCboStats). */
@@ -802,10 +786,10 @@ private[graft] class GraftSqlTable(delegate: ParquetTable,
   override def properties(): util.Map[String, String] = props.asJava
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     morRead match {
-      case Some(reader) =>
-        val hint = morRowsHintIn().map(rows =>
-          (rows, rows * math.max(1L, delegate.schema.defaultSize.toLong)))
-        new GraftMorScanBuilder(delegate.schema, reader, hint, cboStatsIn())
+      // GraftMorNativeRead splices the reader's plan in place of this
+      // relation; a scan built here is only ever planned (DELETE pushdown
+      // hangs off the scan relation) or reached without the extension
+      case Some(_) => () => new GraftUnsplicedMorScan(name(), schema())
       case None =>
         val base = delegate.newScanBuilder(options)
         // Runtime (dynamic) join filtering: wrap the parquet builder so
@@ -841,17 +825,6 @@ private[graft] class GraftSqlTable(delegate: ParquetTable,
   }
 }
 
-/**
- * Read-time merge scan for MoR-pending snapshots (PK deltas, tombstones,
- * files on older schema versions): bridges the distributed keep-latest +
- * tombstone-anti plan [[GraftCatalog.read]] builds into the DSv2 scan via
- * the [[V1Scan]] fallback — `buildScan` hands Spark the plan's RDD, so
- * execution stays on the executors (no driver materialization, unlike the
- * [[LocalScan]] metadata tables). Filter and column pushdown are honored
- * on the merged view: accepted filters and the pruned projection are
- * applied to the DataFrame, where Catalyst pushes them through the merge
- * window into the underlying parquet scans when semantics allow.
- */
 /**
  * ANALYZE statistics → DSv2 [[org.apache.spark.sql.connector.read.Statistics]]
  * (r14): row counts size joins from LOGICAL width (avgLen-weighted — a
@@ -931,62 +904,18 @@ private[graft] object GraftCboStats {
     }
 }
 
-private[sources] class GraftMorScanBuilder(fullSchema: StructType,
-    reader: Array[Filter] => org.apache.spark.sql.DataFrame,
-    /** Upper-bound (rows, bytes) from manifest stats — reported through
-      * SupportsReportStatistics so the optimizer can auto-broadcast a
-      * small MoR dim instead of assuming the V1 default huge size. */
-    sizeHint: Option[(Long, Long)] = None,
-    /** Exact ANALYZE statistics for the scanned snapshot — preferred
-      * over the upper-bound hint when present. Caveat: Spark's
-      * V1ScanWrapper does not forward SupportsReportStatistics, so the
-      * optimizer sees neither through the V1 bridge today (MoR SQL
-      * reads default to the native splice; AQE re-plans the bridge from
-      * runtime sizes) — reported here so the scan is ready the moment
-      * the wrapper forwards, and for direct estimateStatistics callers. */
-    cboStats: Option[GraftCboStats.Stats] = None)
-  extends ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns {
-
-  private var pushed: Array[Filter] = Array.empty
-  private var required: StructType = fullSchema
-
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val (ok, residual) = filters.partition(FilterTranslation.toColumn(_).isDefined)
-    pushed = ok
-    residual
-  }
-  override def pushedFilters(): Array[Filter] = pushed
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-
-  override def build(): Scan = new V1Scan
-      with org.apache.spark.sql.connector.read.SupportsReportStatistics {
-    override def estimateStatistics()
-        : org.apache.spark.sql.connector.read.Statistics = cboStats match {
-      // exact ANALYZE numbers (rows + ndv/nulls/avgLen) beat the
-      // pre-merge upper bound; width taken over the PROJECTED schema
-      case Some((rows, cols)) => GraftCboStats.toV2(rows, required, cols)
-      case None => new org.apache.spark.sql.connector.read.Statistics {
-        override def sizeInBytes(): java.util.OptionalLong = sizeHint
-          .map(h => java.util.OptionalLong.of(h._2))
-          .getOrElse(java.util.OptionalLong.empty())
-        override def numRows(): java.util.OptionalLong = sizeHint
-          .map(h => java.util.OptionalLong.of(h._1))
-          .getOrElse(java.util.OptionalLong.empty())
-      }
-    }
-    override def readSchema(): StructType = required
-    override def toV1TableScan[T <: BaseRelation with TableScan](
-        context: org.apache.spark.sql.SQLContext): T =
-      new BaseRelation with TableScan {
-        override def sqlContext: org.apache.spark.sql.SQLContext = context
-        override def schema: StructType = required
-        override def buildScan(): org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = {
-          val merged = reader(pushed)
-          val filtered = FilterTranslation.toCondition(pushed)
-            .map(merged.filter).getOrElse(merged)
-          filtered.select(required.fieldNames.toSeq.map(F.col): _*).rdd
-        }
-      }.asInstanceOf[T]
-  }
+/** The scan of a reader-backed relation that was never spliced: planning
+  * succeeds (readSchema, DELETE pushdown over the scan relation), but
+  * executing it fails rather than silently reading through another path. */
+private[sources] class GraftUnsplicedMorScan(tableName: String,
+    schema: StructType) extends Scan {
+  override def readSchema(): StructType = schema
+  // row-based, so physical planning never asks for the batch's partitions
+  override def columnarSupportMode(): Scan.ColumnarSupportMode =
+    Scan.ColumnarSupportMode.UNSUPPORTED
+  override def toBatch(): org.apache.spark.sql.connector.read.Batch =
+    throw new UnsupportedOperationException(
+      s"$tableName is read by splicing its merge-on-read plan under the " +
+        "query; MoR SQL reads need " +
+        "spark.sql.extensions=graft.plans.GraftExtensions")
 }

@@ -157,8 +157,7 @@ class CboStatsSpec extends SparkSpecBase {
       gc.analyzeTable("db", "mdim")
       // the pin reports 9 MB logical (over threshold) for the analyzed
       // snapshot — the build side FLIPS to the fact, exactly as on the
-      // raw-file path above (the V1 bridge could never surface this:
-      // V1ScanWrapper forwards no Statistics)
+      // raw-file path above
       assert(buildSideCols(q) === Set("fk"))
       // a new commit detaches the stats (never served stale): the dim
       // becomes the build side again
@@ -168,11 +167,7 @@ class CboStatsSpec extends SparkSpecBase {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
   }
 
-  // NOTE: shapes still on the V1 bridge (DELETE pushdown relations,
-  // `$audit_log`-style wrapped reads, splice fallbacks) cannot surface
-  // these stats — Spark's V1ScanWrapper does not forward
-  // SupportsReportStatistics (this also swallows the r11 pre-merge rows
-  // hint; AQE re-plans those from runtime sizes). MoR SQL reads default
-  // to the native splice, which since r15 pins ANALYZE statistics onto
-  // its subtree (GraftStatsPin) — tested above.
+  // NOTE: DELETE pushdown relations keep their relation and never read
+  // through a scan, so only the spliced read path needs these stats; it
+  // pins them onto its subtree (GraftStatsPin) — tested above.
 }

@@ -81,10 +81,17 @@ class GraftSparkCatalogSpec extends SparkSpecBase {
       "SELECT id, v, _row_kind FROM g.db.`aud$audit_log` ORDER BY id")
       .collect().map(r => (r.getLong(0), r.get(1), r.getString(2))).toSeq
     assert(rows === Seq((1L, null, "-D"), (2L, "b2", "+U")))
-    // filters push into the bridge
-    assert(spark.sql(
+    // filters apply over the spliced changelog plan
+    val q = spark.sql(
       "SELECT count(*) FROM g.db.`aud$audit_log` WHERE _row_kind = '-D'")
-      .head().getLong(0) === 1L)
+    assert(q.head().getLong(0) === 1L)
+    // the changelog plan itself runs under the query: parquet scans,
+    // no row-bridge RDD scan
+    val plan = q.queryExecution.executedPlan.toString
+    assert(!plan.contains("Scan ExistingRDD") && !plan.contains("RDDScan"),
+      s"$$audit_log still reads through an RDD scan:\n$plan")
+    assert(plan.contains("FileScan parquet") || plan.contains("Scan parquet"),
+      s"no parquet scan in the spliced $$audit_log plan:\n$plan")
   }
 
   test("$ro serves the read-optimized snapshot through the native path") {
@@ -97,7 +104,7 @@ class GraftSparkCatalogSpec extends SparkSpecBase {
     // live table merges the delta; $ro serves the last resolved snapshot
     assert(spark.sql("SELECT v FROM g.db.rot WHERE id = 2").head().getString(0) === "b2")
     assert(spark.sql("SELECT v FROM g.db.`rot$ro` WHERE id = 2").head().getString(0) === "b")
-    // $ro is the raw parquet path: BatchScan, no V1 merge bridge
+    // $ro is the raw parquet path: BatchScan, no merge
     val plan = spark.sql("SELECT * FROM g.db.`rot$ro`")
       .queryExecution.executedPlan.toString
     assert(plan.contains("BatchScan"), s"expected native scan:\n$plan")
@@ -114,6 +121,18 @@ class GraftSparkCatalogSpec extends SparkSpecBase {
     assert(spark.sql(
       "SELECT v FROM g.db.`rot$ro` VERSION AS OF 'before-compact' WHERE id = 2")
       .head().getString(0) === "b")
+    // no resolved snapshot (a tombstone before the first data): $ro
+    // reads as empty with the table's schema, and stays read-only
+    gc.createTable("db", "rotnone", Seq((1L, "a")).toDF("id", "v").schema,
+      primaryKey = Seq("id"))
+    gc.deleteWhere("db", "rotnone", col("id") === 1L)
+    gc.upsert("db", "rotnone", Seq((1L, "a2")).toDF("id", "v"))
+    assert(gc.resolvedSnapshotId("db", "rotnone") === None)
+    val none = spark.sql("SELECT * FROM g.db.`rotnone$ro`")
+    assert(none.columns.toSeq === Seq("id", "v") && none.count() === 0L)
+    intercept[Exception](spark.sql("INSERT INTO g.db.`rotnone$ro` VALUES (9, 'x')"))
+    assert(spark.sql("SELECT v FROM g.db.rotnone").collect().map(_.getString(0))
+      .toSeq === Seq("a2"))
   }
 
   test("ALTER COLUMN TYPE widens metadata-only; narrowing refuses") {
@@ -548,16 +567,15 @@ class GraftSparkCatalogSpec extends SparkSpecBase {
     assert(!gc.listTables("db").contains("r2"))
   }
 
-  test("a small MoR-pending PK dim reports its manifest-stats size and " +
-      "auto-broadcasts in a SQL join") {
+  test("a small MoR-pending PK dim auto-broadcasts through the splice") {
     import spark.implicits._
     spark.sql("CREATE NAMESPACE IF NOT EXISTS g.db")
     gc.createTable("db", "dimsmall", StructType(Seq(
       StructField("k", LongType), StructField("label", StringType))),
       primaryKey = Seq("k"))
-    // two uncompacted deltas -> the scan goes through the V1 merge
-    // bridge, which without the stats hint reports the default huge
-    // size and would never broadcast
+    // two uncompacted deltas -> the merge plan is spliced under the
+    // join, whose own size estimate (the version files' bytes) puts the
+    // small dim under the broadcast threshold
     gc.upsert("db", "dimsmall", (1L to 50L).map(i => (i, s"l$i")).toDF("k", "label"))
     gc.upsert("db", "dimsmall", (1L to 10L).map(i => (i, s"u$i")).toDF("k", "label"))
     gc.createTable("db", "factbig", StructType(Seq(
@@ -585,15 +603,15 @@ class GraftSparkCatalogSpec extends SparkSpecBase {
     gc.upsert("db", "mornative", (1L to 50L).map(i => (i, s"b$i", i * 2)).toDF("id", "v", "w"))
     gc.deleteWhere("db", "mornative", col("id") > 190L)
     val q = spark.sql("SELECT id, v FROM g.db.mornative WHERE w <= 60 ORDER BY id")
-    // result identical to the library read (and to the V1 bridge fallback)
+    // result identical to the library read
     val expected = gc.read("db", "mornative").filter(col("w") <= 60)
       .select("id", "v").orderBy("id").collect().toSeq
     assert(q.collect().toSeq === expected)
     // plan-shape asserts on the FINAL adaptive plan (post-execution)
     val plan = q.queryExecution.executedPlan.toString
     assert(!plan.contains("Scan ExistingRDD") && !plan.contains("RDDScan")
-        && !plan.contains("GraftMorScanBuilder"),
-      s"MoR SQL read still routes through the V1 row bridge:\n$plan")
+        && !plan.contains("GraftUnsplicedMorScan"),
+      s"MoR SQL read is not spliced:\n$plan")
     assert(plan.contains("FileScan parquet") || plan.contains("Scan parquet"),
       s"no native parquet scan in the spliced plan:\n$plan")
     // AQE final plans print codegen stages as `*(n)` operator prefixes
@@ -607,18 +625,33 @@ class GraftSparkCatalogSpec extends SparkSpecBase {
     assert(ptPlan.contains("PushedFilters: [IsNotNull(id), EqualTo(id,7)")
       || ptPlan.contains("EqualTo(id,7)"),
       s"PK point lookup not pushed into the parquet scans:\n$ptPlan")
-    spark.conf.set("spark.graft.morNativeRead.enabled", "false")
-    try {
-      val fb = spark.sql("SELECT id, v FROM g.db.mornative WHERE w <= 60 ORDER BY id")
-      assert(fb.queryExecution.executedPlan.toString.contains("GraftMorScanBuilder"),
-        "fallback path should use the V1 bridge when disabled")
-      assert(fb.collect().toSeq === expected)
-    } finally spark.conf.set("spark.graft.morNativeRead.enabled", "true")
     // aggregates over the spliced merge plan stay correct
     assert(spark.sql("SELECT count(*) FROM g.db.mornative").head().getLong(0) === 190L)
     assert(spark.sql(
       "SELECT sum(w) FROM g.db.mornative WHERE id <= 50").head().getLong(0)
       === (1L to 50L).map(_ * 2).sum)
+  }
+
+  test("an unspliced MoR relation plans a scan that refuses to execute, " +
+      "naming the extension") {
+    import spark.implicits._
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS g.db")
+    gc.createTable("db", "unspliced", Seq((1L, "a")).toDF("id", "v").schema,
+      primaryKey = Seq("id"))
+    gc.upsert("db", "unspliced", Seq((1L, "a"), (2L, "b")).toDF("id", "v"))
+    gc.upsert("db", "unspliced", Seq((2L, "b2")).toDF("id", "v"))
+    val cat = new graft.sources.GraftSparkCatalog
+    cat.initialize("g", new org.apache.spark.sql.util.CaseInsensitiveStringMap(
+      java.util.Map.of("warehouse", warehouse)))
+    val table = cat.loadTable(
+      org.apache.spark.sql.connector.catalog.Identifier.of(Array("db"), "unspliced"))
+      .asInstanceOf[org.apache.spark.sql.connector.catalog.SupportsRead]
+    val scan = table.newScanBuilder(
+      org.apache.spark.sql.util.CaseInsensitiveStringMap.empty()).build()
+    assert(scan.readSchema() === table.schema())
+    val e = intercept[UnsupportedOperationException](scan.toBatch)
+    assert(e.getMessage.contains(
+      "spark.sql.extensions=graft.plans.GraftExtensions"), e.getMessage)
   }
 
   test("multi-dir PARTITIONED reads execute natively through the splice " +
@@ -639,8 +672,8 @@ class GraftSparkCatalogSpec extends SparkSpecBase {
     assert(q.count() === 150)
     val plan = q.queryExecution.executedPlan.toString
     assert(!plan.contains("Scan ExistingRDD") && !plan.contains("RDDScan")
-        && !plan.contains("GraftMorScanBuilder"),
-      s"multi-dir partitioned read still routes the V1 row bridge:\n$plan")
+        && !plan.contains("GraftUnsplicedMorScan"),
+      s"multi-dir partitioned read is not spliced:\n$plan")
     assert(plan.contains("FileScan parquet") || plan.contains("Scan parquet"),
       s"no native parquet scan under the splice:\n$plan")
     // partition-column predicates prune at the per-dir scans
@@ -658,9 +691,9 @@ class GraftSparkCatalogSpec extends SparkSpecBase {
       (i, s"u$i", s"p${i % 3}")).toDF("id", "v", "p"))
     val q2 = spark.sql("SELECT id, v FROM g.db.mdirpk WHERE p = 'p1' ORDER BY id")
     val plan2 = q2.queryExecution.executedPlan.toString
-    assert(!plan2.contains("GraftMorScanBuilder") &&
+    assert(!plan2.contains("GraftUnsplicedMorScan") &&
         !plan2.contains("Scan ExistingRDD"),
-      s"partitioned PK MoR read still routes the V1 row bridge:\n$plan2")
+      s"partitioned PK MoR read is not spliced:\n$plan2")
     val got = q2.collect().map(r => (r.getLong(0), r.getString(1))).toSeq
     val want = (1L to 100L).filter(_ % 3 == 1)
       .map(i => (i, if (i <= 40) s"u$i" else s"a$i"))

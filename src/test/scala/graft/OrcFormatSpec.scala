@@ -88,7 +88,7 @@ class OrcFormatSpec extends SparkSpecBase {
     spark.sql("INSERT INTO go.db.o3 VALUES (1, 'a'), (2, 'b')")
     assert(spark.sql("SELECT v FROM go.db.o3 WHERE id = 2").head().getString(0) === "b")
     assert(gc.fileFormatOf("db", "o3") === "orc")
-    // pushed filters still answer exactly through the bridge
+    // pushed filters still answer exactly through the spliced reader
     assert(spark.sql("SELECT count(*) FROM go.db.o3 WHERE id >= 2").head().getLong(0) === 1)
   }
 

@@ -209,10 +209,10 @@ class ZonePruneSpec extends SparkSpecBase {
     val pruned = gc.readWhere("db", "zpart", col("lang") === "yy")
     assert(scannedDirs(pruned) === Set("snap-2"))
     assert(pruned.count() === 1)
-    // Multi-dir partitioned tables read through the V1 merge bridge
-    // (Spark partition discovery can't span several snapshot roots);
-    // the bridge routes pushed filters into readWhere, so the same
-    // dir-level zone pruning applies inside its plan.
+    // Multi-dir partitioned tables read through the catalog's spliced
+    // reader (Spark partition discovery can't span several snapshot
+    // roots); the splice routes pushed filters into readWhere, so the
+    // same dir-level zone pruning applies inside its plan.
     val sql = spark.sql("SELECT * FROM gz.db.zpart WHERE lang = 'yy'")
     assert(sql.count() === 1)
     assert(spark.sql("SELECT id FROM gz.db.zpart ORDER BY id").collect()
@@ -427,7 +427,7 @@ class ZonePruneSpec extends SparkSpecBase {
     assert(planOf(q3).contains("LocalTableScan"), planOf(q3))
     assert(spark.sql(q3).head().getLong(0) === 250L)
     // a DATA-column predicate is not total per file: the scan stands
-    // (this table reads through the V1 merge bridge — "Scan graft...")
+    // (this table reads through the spliced reader plan)
     val q4 = "SELECT count(*) FROM gz.db.zmc WHERE id < 100"
     assert(!planOf(q4).contains("LocalTableScan"), planOf(q4))
     assert(spark.sql(q4).head().getLong(0) === 100L)
